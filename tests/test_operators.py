@@ -312,6 +312,92 @@ def test_brute_force_topk_matches_numpy(spark, embeddings_df):
         assert gs == pytest.approx(es, abs=1e-5)
 
 
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_brute_force_topk_matches_jvm_fold(spark, monkeypatch, id_type):
+    """brute_force_topk returns, row for row, what the JVM fold it
+    replaced returned: the zip_with/aggregate cosine over a broadcast
+    cross join, cut by the same window. The reference stays inline.
+    It runs with ANSI off, where x/0 is null; under ANSI the fold
+    raised DIVIDE_BY_ZERO on a zero-norm vector.
+
+    Covered: a zero-norm vector, a null embedding and a null element
+    (all score a null cos_sim ranked last), exact cosine ties, queries
+    inside the corpus (self-excluded) and outside it, k below and
+    above |corpus|, and a salt above defaultParallelism with the
+    candidate axis chunked (identical rows at any salt)."""
+    import numpy as np
+    from pyspark.sql import Window
+
+    rng = np.random.default_rng(7)
+    vecs = [[0.0, 0.0, 0.0], [1.0, 0.0, 0.0], [2.0, 0.0, 0.0], [1.0, 0.0, 0.0],
+            None, [1.0, None, 0.0]]
+    vecs += [rng.standard_normal(3).round(3).tolist() for _ in range(14)]
+    queries_in = [0, 1, 4, 5, 7, 12]
+    queries_out = [(100, [3.0, 0.0, 0.0]), (101, [0.5, -0.25, 1.0])]
+    key = int if id_type == "int" else str
+    schema = f"vec_id {id_type}, embedding array<double>"
+    # checkpointed: scans of a Python-list frame would start Python workers
+    corpus = spark.createDataFrame(
+        [(key(i), v) for i, v in enumerate(vecs)], schema
+    ).localCheckpoint()
+    queries = spark.createDataFrame(
+        [(key(i), vecs[i]) for i in queries_in]
+        + [(key(i), v) for i, v in queries_out],
+        schema,
+    ).localCheckpoint()
+
+    def jvm_fold(k):
+        q = queries.select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+        )
+        c = corpus.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("cos_sim").desc(), F.col("neighbor_id")
+        )
+        ansi = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            return (
+                c.crossJoin(F.broadcast(q))
+                .where(F.col("neighbor_id") != F.col("query_id"))
+                .withColumn("cos_sim", similarity.cosine(F.col("qv"), F.col("cv")))
+                .withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
+                .select("query_id", "neighbor_id",
+                        F.round("cos_sim", 6).alias("cos_sim"), "rank")
+                .orderBy("query_id", "rank")
+                .collect()
+            )
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+    def kernel(k):
+        out = similarity.brute_force_topk(corpus, queries, k=k)
+        assert out.dtypes == [
+            ("query_id", id_type), ("neighbor_id", id_type),
+            ("cos_sim", "double"), ("rank", "int"),
+        ]
+        return out.orderBy("query_id", "rank").collect()
+
+    want = {k: jvm_fold(k) for k in (3, len(vecs) + 2)}
+    for k, rows in want.items():
+        assert kernel(k) == rows
+        assert len(rows) == min(k, len(vecs) - 1) * len(queries_in) + min(
+            k, len(vecs)
+        ) * len(queries_out)
+    # the cases the reference must actually exercise
+    full = want[len(vecs) + 2]
+    assert any(r["cos_sim"] is None for r in full)
+    assert any(r["query_id"] == key(100) and r["cos_sim"] == 1.0 for r in full)
+
+    # salt above defaultParallelism, and the k cut merged across chunks
+    monkeypatch.setattr(similarity, "_COGROUP_C_BLOCK", 2)
+    assert -(-len(vecs) // 2) > spark.sparkContext.defaultParallelism
+    assert kernel(3) == want[3]
+
+
 def test_hyperplane_lsh_recall(spark, embeddings_df):
     queries = embeddings_df.where(F.col("vec_id") < 10)
     exact = similarity.brute_force_topk(embeddings_df, queries, k=3)
@@ -3652,10 +3738,12 @@ def test_collect_serve_guards_query_table(spark, monkeypatch):
         [(i, [float(i), 1.0]) for i in range(10)],
         "vec_id long, embedding array<double>",
     )
-    with pytest.raises(ValueError, match="ivf_query_index_join"):
-        similarity.brute_force_topk_pandas(df, df, k=2)
+    cb = similarity.pq_codebooks_seeded(df, m_subspaces=2, n_codes=4)
+    codes = similarity.pq_encode(df, cb)
+    with pytest.raises(ValueError, match="ivfpq_query_index_join"):
+        similarity.pq_topk(codes, df, cb, k=2)
     # within the cap the serve works unchanged
-    out = similarity.brute_force_topk_pandas(df, df.limit(2), k=2)
+    out = similarity.pq_topk(codes, df.limit(2), cb, k=2)
     assert out.count() == 4
 
 

@@ -120,16 +120,19 @@ def test_minhash_signature_reuses_repartition(spark, sf_dir):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
-def test_brute_force_topk_broadcasts_queries(spark, sf_dir):
+def test_brute_force_topk_is_one_cogroup(spark, sf_dir):
+    """Exact top-k is one cogrouped kernel pass: the corpus shuffles once
+    by (cell, salt), no pair-wise join exists, and only the per-group
+    winners (the rank-limit pushdown keeps <=k rows per query and
+    partition) reach the window's shuffle."""
     from thoth_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.brute_force_topk(emb, emb.where(F.col("vec_id") < 5), k=3)
     plan = _plan(out)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    # Spark's rank-limit pushdown must kick in: only <=k rows per
-    # (query, input partition) reach the shuffle, so shuffle volume is
-    # O(k * queries * partitions), not O(corpus * queries)
+    assert plan.count("FlatMapCoGroupsInPandas") == 1
+    assert "Join" not in plan
+    assert len(re.findall(r"Exchange hashpartitioning\(cell", plan)) == 2
     assert "WindowGroupLimit" in plan and "Partial" in plan
 
 
