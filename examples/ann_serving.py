@@ -15,7 +15,8 @@ The index lifecycle a 10⁹-vector deployment runs, at fixture scale:
    against the float vectors.
 3. INGEST — `ivf_index_append` (float-cell layout): new vectors join
    under the FROZEN coarse quantizer via dynamic partition append —
-   O(batch) cost, no rebuild; the next probe sees the union.
+   O(batch) cost, no rebuild; the next probe through
+   `ivf_query_index_join`, the one float/SQ8 IVF serve, sees the union.
 4. EVALUATE — recall@k of the pruned serve against exact brute force,
    the number every ANN deployment tunes nprobe/rerank_pool against.
 5. BULK SERVE — `ivfpq_query_index_join`: the same index answers a
@@ -78,7 +79,7 @@ def run(spark, sf_dir: str, root: str | None = None) -> dict:
     )
     similarity.ivf_index_append(spark, ivf_dir, emb.where(F.col("vec_id") % 2 == 1))
     union_rows = spark.read.parquet(f"{ivf_dir}/cells").count()
-    full_serve = similarity.ivf_query_index(
+    full_serve = similarity.ivf_query_index_join(
         spark, ivf_dir, queries, k=5, nprobe=8
     ).select("query_id", "neighbor_id")
     full_recall = (
@@ -169,7 +170,7 @@ def run_drift_retrain(spark, sf_dir: str, root: str | None = None) -> dict:
     )
 
     def pruned_recall(path: str) -> float:
-        served = similarity.ivf_query_index(
+        served = similarity.ivf_query_index_join(
             spark, path, queries, k=5, nprobe=2
         ).select("query_id", "neighbor_id")
         return exact.join(served, ["query_id", "neighbor_id"]).count() / exact.count()

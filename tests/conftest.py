@@ -31,7 +31,7 @@ _SLOW_TESTS = frozenset(
         "test_operators.py::test_ivfpq_index_non_unit_norm_queries",
         "test_operators.py::test_ivf_index_compact_preserves_serves",
         "test_entry_oracle.py::test_rows_only_query_runs[c4_span_dedup_incremental_documents]",
-        "test_operators.py::test_ivf_index_join_serve_matches_collect_path",
+        "test_operators.py::test_ivf_index_join_serve_matches_references",
         "test_plans.py::test_ann_join_serve_query_side_stays_distributed",
         "test_operators.py::test_ivf_index_append_equals_full_build",
         "test_operators.py::test_ivfpq_residual_beats_global_adc",

@@ -2855,7 +2855,7 @@ def test_ivf_index_roundtrip(spark, tmp_path):
     cents = similarity.coarse_centroids(emb, "embedding", 8, seed=11)
     path = str(tmp_path / "ivf")
     similarity.build_ivf_index(emb, path, centroids=cents)
-    got = similarity.ivf_query_index(spark, path, queries, k=3, nprobe=2)
+    got = similarity.ivf_query_index_join(spark, path, queries, k=3, nprobe=2)
     want = similarity.ivf_topk(emb, queries, k=3, nprobe=2, centroids=cents)
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     gr = sorted(map(tuple, got.collect()), key=lambda t: (t[0], t[3]))
@@ -2888,8 +2888,8 @@ def test_ivf_index_append_equals_full_build(spark, tmp_path):
         similarity.ivf_index_append(spark, inc, second)
         similarity.build_ivf_index(emb, full, centroids=cents, quantize=quantize)
         kw = {"rerank_corpus": emb} if quantize else {}
-        got = similarity.ivf_query_index(spark, inc, queries, k=3, nprobe=2, **kw)
-        want = similarity.ivf_query_index(spark, full, queries, k=3, nprobe=2, **kw)
+        got = similarity.ivf_query_index_join(spark, inc, queries, k=3, nprobe=2, **kw)
+        want = similarity.ivf_query_index_join(spark, full, queries, k=3, nprobe=2, **kw)
         gr = sorted(map(tuple, got.collect()), key=lambda t: (t[0], t[3]))
         wr = sorted(map(tuple, want.collect()), key=lambda t: (t[0], t[3]))
         assert gr == wr and len(gr) == 15, (quantize, gr[:3], wr[:3])
@@ -3004,7 +3004,7 @@ def test_ivf_index_quantized_rerank_matches_quantized_topk(spark, tmp_path):
     similarity.build_ivf_index(emb, path, centroids=cents, quantize=True)
     cells = spark.read.parquet(f"{path}/cells")
     assert dict(cells.dtypes)["qvec"] == "array<tinyint>"
-    got = similarity.ivf_query_index(
+    got = similarity.ivf_query_index_join(
         spark, path, queries, k=3, nprobe=4, rerank_corpus=emb
     )
     want = similarity.quantized_topk(emb, queries, k=3)
@@ -3580,41 +3580,116 @@ def test_ivfpq_residual_beats_global_adc(spark):
     assert r / brute.count() >= 0.4, r / brute.count()
 
 
-def test_ivf_index_join_serve_matches_collect_path(spark, tmp_path):
-    """r12 verdict #2 (the one remaining scale hole): the join-based
-    serve keeps the query set a DataFrame end-to-end and must return
-    EXACTLY the collect path's rows — float layout, SQ8 approximate,
-    and SQ8 + exact rerank, at partial and full probe."""
+def _sq8_serve_reference(cells, cents, queries, k, nprobe, rerank_corpus=None):
+    """Pure-Python SQ8 index serve over the STORED int8 cells, in
+    Spark's evaluation order: the query's ``nprobe`` nearest centroids
+    (``||c||² − 2q·c``, ties to the lower cid), the query quantized
+    HALF_UP, the integer dot de-quantized over the stored float norms,
+    and — with ``rerank_corpus`` (``(id, vector)`` rows) — the top 10·k
+    candidates re-scored by the sequential-fold cosine. Returns
+    ``{query_id: [(neighbor_id, cos_sim), ...]}`` in rank order."""
+    import numpy as np
+
+    def fold_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    def fold_cos(a, b):
+        return fold_dot(a, b) / (math.sqrt(fold_dot(a, a)) * math.sqrt(fold_dot(b, b)))
+
+    cent_sq = (cents * cents).sum(axis=1)
+    exact = {i: [float(x) for x in v] for i, v in rerank_corpus or []}
+    out = {}
+    for qid, qv in queries:
+        qv = [float(x) for x in qv]
+        d = cent_sq - 2.0 * (np.asarray([qv]) @ cents.T)
+        probed = set(np.argsort(d, axis=1, kind="stable")[0][:nprobe].tolist())
+        amax = max(abs(x) for x in qv)
+        q_scale = amax / 127.0 if amax > 0 else 1.0
+        q_qvec = [int(math.copysign(math.floor(abs(x / q_scale) + 0.5), x)) for x in qv]
+        q_vnorm = math.sqrt(fold_dot(qv, qv))
+        approx = sorted(
+            (
+                -(
+                    float(sum(a * b for a, b in zip(c["qvec"], q_qvec)))
+                    * c["scale"]
+                    * q_scale
+                    / (c["vnorm"] * q_vnorm)
+                ),
+                c["vec_id"],
+            )
+            for c in cells
+            if c["cell"] in probed and c["vec_id"] != qid
+        )
+        if rerank_corpus is not None:
+            approx = sorted(
+                (-fold_cos(qv, exact[nid]), nid) for _, nid in approx[: 10 * k]
+            )
+        out[qid] = [(nid, -neg) for neg, nid in approx[:k]]
+    return out
+
+
+def test_ivf_index_join_serve_matches_references(spark, tmp_path):
+    """The one IVF index serve against independent references at partial
+    and full probe: on the float layout it returns exactly ivf_topk's
+    rows with the same centroids; on the SQ8 layout, approximate and
+    with exact rerank, it returns the ids of a pure-Python serve over the
+    stored int8 cells (``_sq8_serve_reference``), cos_sim within 1e-6."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from thoth_spark.operators import similarity
     from thoth_spark.sources import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.limit(5)
+    queries = emb.where(F.col("vec_id") < 5)
+    q_rows = [(r["vec_id"], r["embedding"]) for r in queries.collect()]
     cents = similarity.coarse_centroids(emb, "embedding", 8, seed=11)
     for quantize in (False, True):
         path = str(tmp_path / f"ivf_{quantize}")
         similarity.build_ivf_index(emb, path, centroids=cents, quantize=quantize)
+        cells = spark.read.parquet(f"{path}/cells").collect()
         reranks = [None, emb] if quantize else [None]
         for rc in reranks:
             for nprobe in (2, 8):
                 kw = {"rerank_corpus": rc} if rc is not None else {}
                 got = similarity.ivf_query_index_join(
                     spark, path, queries, k=3, nprobe=nprobe, **kw
+                ).collect()
+                case = (quantize, nprobe, rc is None)
+                assert len(got) == 15, case
+                if not quantize:
+                    want = similarity.ivf_topk(
+                        emb, queries, k=3, nprobe=nprobe, centroids=cents
+                    )
+                    assert sorted(map(tuple, got)) == sorted(
+                        map(tuple, want.collect())
+                    ), case
+                    continue
+                ref = _sq8_serve_reference(
+                    cells, cents, q_rows, 3, nprobe,
+                    None if rc is None
+                    else [(r["vec_id"], r["embedding"]) for r in rc.collect()],
                 )
-                want = similarity.ivf_query_index(
-                    spark, path, queries, k=3, nprobe=nprobe, **kw
-                )
-                gr = sorted(map(tuple, got.collect()))
-                wr = sorted(map(tuple, want.collect()))
-                assert gr == wr and len(gr) == 15, (quantize, nprobe, rc is None)
+                by_q = {}
+                for r in sorted(got, key=lambda r: (r["query_id"], r["rank"])):
+                    by_q.setdefault(r["query_id"], []).append(
+                        (r["neighbor_id"], r["cos_sim"])
+                    )
+                assert by_q.keys() == ref.keys(), case
+                for qid, want_rows in ref.items():
+                    assert [n for n, _ in by_q[qid]] == [n for n, _ in want_rows], (
+                        case, qid, by_q[qid], want_rows
+                    )
+                    for (_, gc), (_, wc) in zip(by_q[qid], want_rows):
+                        assert abs(gc - wc) <= 1e-6, (case, qid, gc, wc)
 
 
 def test_ivf_join_serve_vectorized_parity(spark, tmp_path):
-    """The cogrouped vectorized scorer (prune_cells=False float path,
-    the knn_graph workload) must return EXACTLY the pair-join path's
-    rows: sequential-dim accumulation reproduces the JVM fold's IEEE
+    """knn_graph's cogrouped vectorized scorer must return EXACTLY the
+    rows of ivf_query_index_join's JVM pair path with the corpus as the
+    query set: sequential-dim accumulation reproduces the JVM fold's IEEE
     addition order bit-for-bit, and the per-group top-k cut uses the
     same (cos desc, neighbor asc) total order as the global window —
     including exact-duplicate vectors (cosine ties) and the self-pair
@@ -3636,11 +3711,9 @@ def test_ivf_join_serve_vectorized_parity(spark, tmp_path):
     path = str(tmp_path / "ivf_vec")
     similarity.build_ivf_index(corpus, path, centroids=cents)
     for nprobe, k in ((2, 3), (8, 3), (8, 1)):
-        fast = similarity.ivf_query_index_join(
-            spark, path, corpus, k=k, nprobe=nprobe, prune_cells=False
-        )
+        fast = similarity.knn_graph(spark, path, corpus, k=k, nprobe=nprobe)
         ref = similarity.ivf_query_index_join(
-            spark, path, corpus, k=k, nprobe=nprobe, prune_cells=True
+            spark, path, corpus, k=k, nprobe=nprobe
         )
         fr = sorted(map(tuple, fast.collect()))
         rr = sorted(map(tuple, ref.collect()))
@@ -3853,7 +3926,7 @@ def test_ivf_index_compact_preserves_serves(spark, tmp_path):
     """r13: after repeated appends multiply the per-cell file count,
     ivf_index_compact must shrink files without changing a single serve
     result, for both the float and PQ layouts (same quantizers, same
-    rows, same top-k through the collect AND join serves)."""
+    rows, same top-k through the IVF serve and the PQ serve)."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from thoth_spark.operators import similarity
@@ -3867,19 +3940,16 @@ def test_ivf_index_compact_preserves_serves(spark, tmp_path):
     similarity.build_ivf_index(emb.where(F.col("vec_id") % 4 == 0), ivf, centroids=cents)
     for r in (1, 2, 3):  # three appends -> up to 4 files per cell
         similarity.ivf_index_append(spark, ivf, emb.where(F.col("vec_id") % 4 == r))
-    before = sorted(map(tuple, similarity.ivf_query_index(
+    before = sorted(map(tuple, similarity.ivf_query_index_join(
         spark, ivf, queries, k=3, nprobe=2
     ).collect()))
     stats = similarity.ivf_index_compact(spark, ivf)
     assert stats["files_after"] < stats["files_before"], stats
     assert spark.read.parquet(f"{ivf}/cells").count() == emb.count()
-    after = sorted(map(tuple, similarity.ivf_query_index(
+    after = sorted(map(tuple, similarity.ivf_query_index_join(
         spark, ivf, queries, k=3, nprobe=2
     ).collect()))
-    after_join = sorted(map(tuple, similarity.ivf_query_index_join(
-        spark, ivf, queries, k=3, nprobe=2
-    ).collect()))
-    assert before == after == after_join
+    assert before == after
 
     pq = str(tmp_path / "pq")
     similarity.build_ivfpq_index(
@@ -4054,6 +4124,23 @@ def test_knn_graph_exact_at_fullprobe(spark, tmp_path):
     got = similarity.knn_graph(spark, path, emb, k=3, nprobe=4)
     want = similarity.brute_force_topk(emb, emb, k=3)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_knn_graph_rejects_sq8_layout(spark, tmp_path):
+    """knn_graph scores float vectors: an SQ8 (quantize=True) index is
+    refused with a ValueError instead of being scored approximately."""
+    import numpy as np
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "sq8")
+    similarity.build_ivf_index(
+        df, path, centroids=np.eye(3), quantize=True
+    )
+    with pytest.raises(ValueError, match="SQ8"):
+        similarity.knn_graph(spark, path, df, k=2, nprobe=3)
 
 
 def test_gopher_repetition_signals(spark):

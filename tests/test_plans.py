@@ -776,6 +776,33 @@ def test_ann_join_serve_query_side_stays_distributed(
         ), plan[:2000]
 
 
+def test_spread_narrow_probes_partitions_below_file_parallelism(spark, tmp_path):
+    """spread_narrow's file count only settles the wide case: a frame
+    rooted in one parquet file that a derived stage already spread to
+    cluster width comes back untouched (no added Exchange), while the
+    bare one-file scan is still spread."""
+    from thoth_spark.operators.partitioning import spread_narrow
+
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one_file")
+    spark.range(200).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert len(scan.inputFiles()) == 1
+
+    def n_exchanges(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count(
+            "RepartitionByExpression"
+        )
+
+    wide = scan.repartition(target, "id")
+    out = spread_narrow(wide, "id")
+    assert out is wide and n_exchanges(out) == 1
+
+    spread = spread_narrow(scan, "id")
+    assert n_exchanges(scan) == 0 and n_exchanges(spread) == 1
+    assert spread.rdd.getNumPartitions() == target
+
+
 def test_gopher_rules_zero_exchange(spark, sf_dir):
     """The Gopher quality gate is a pure map-side expression pass: no
     UDF, no exchange anywhere in the plan — the property that makes it

@@ -674,10 +674,11 @@ def test_semdedup_degenerate_identical_cluster_is_linear(spark):
 def test_ann_join_serve_degenerate_single_cell_is_salted(spark, tmp_path):
     """Adversarial ANN-join shape: every corpus vector lands in ONE cell
     (near-identical embeddings), so the cell equi-join has a single hot
-    key. The salted join must (a) stay correct — bit-equal to the
-    collect serve — and (b) actually spread the hot cell over the salt
-    space: the corpus side's salt column must take multiple values
-    inside the hot cell, so no single reducer owns the inverted list."""
+    key. The salted join must (a) stay correct — bit-equal to ivf_topk
+    with the index's centroids — and (b) actually spread the hot cell
+    over the salt space: the corpus side's salt column must take
+    multiple values inside the hot cell, so no single reducer owns the
+    inverted list."""
     import numpy as np
 
     from pyspark.sql import functions as F
@@ -691,24 +692,26 @@ def test_ann_join_serve_degenerate_single_cell_is_salted(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     path = str(tmp_path / "hot")
-    similarity.build_ivf_index(df, path, n_centroids=4)
+    cents = similarity.build_ivf_index(df, path, n_centroids=4)
     q = df.limit(5)
     got = sorted(map(tuple, similarity.ivf_query_index_join(
-        spark, path, q, k=3, nprobe=1, salt=8
-    ).collect()))
-    want = sorted(map(tuple, similarity.ivf_query_index(
         spark, path, q, k=3, nprobe=1
     ).collect()))
+    want = sorted(map(tuple, similarity.ivf_topk(
+        df, q, k=3, nprobe=1, centroids=cents
+    ).collect()))
     assert got == want and len(got) == 15
-    # the hot cell's rows carry >= 4 distinct salts (8 expected minus
-    # hash-collision slack) — the join key (cell, __salt) fans the
-    # single inverted list over multiple reducers
+    # the hot cell's rows carry >= 4 distinct salts (_SERVE_SALT = 8
+    # expected minus hash-collision slack) — the join key (cell, __salt)
+    # fans the single inverted list over multiple reducers
     cells = spark.read.parquet(f"{path}/cells")
     hot = (
         cells.groupBy("cell").count().orderBy(F.desc("count")).first()["cell"]
     )
     n_salts = (
-        similarity._salted(cells.where(F.col("cell") == hot), "vec_id", 8)
+        similarity._salted(
+            cells.where(F.col("cell") == hot), "vec_id", similarity._SERVE_SALT
+        )
         .select("__salt")
         .distinct()
         .count()

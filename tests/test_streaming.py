@@ -467,10 +467,10 @@ def test_index_ingest_foreach_batch_continuous_append(spark, tmp_path):
         emb, pq_full, n_centroids=8, m_subspaces=8, n_codes=16,
         centroids=cents, codebooks=cb,
     )
-    got = sorted(map(tuple, similarity.ivf_query_index(
+    got = sorted(map(tuple, similarity.ivf_query_index_join(
         spark, ivf_dir, queries, k=3, nprobe=2
     ).collect()))
-    want = sorted(map(tuple, similarity.ivf_query_index(
+    want = sorted(map(tuple, similarity.ivf_query_index_join(
         spark, ivf_full, queries, k=3, nprobe=2
     ).collect()))
     assert got == want and len(got) == 15

@@ -4305,15 +4305,15 @@ def _ivf_index_dir(spark, sf_dir: str) -> str:
 
 @query("similarity_topk_ivf_index_fullprobe", ORACLE_TOPK_EMB)
 def similarity_topk_ivf_index_fullprobe(spark, sf_dir):
-    """The persisted-index serving path (similarity.ivf_query_index —
-    centroid fetch, query-to-cell assignment, partition-pruned cell
-    scan, broadcast query join) probed at nprobe = n_centroids: every
-    cell partition is read, so the result equals exact brute force
-    REGARDLESS of centroid placement — the storage-roundtrip twin of
+    """The persisted-index serving path (similarity.ivf_query_index_join
+    — centroid fetch, query-to-cell assignment, salted cell equi-join)
+    probed at nprobe = n_centroids: every cell partition is read, so
+    the result equals exact brute force REGARDLESS of centroid
+    placement — the storage-roundtrip twin of
     similarity_topk_ivf_fullprobe, hash-verifying that build_ivf_index
-    + ivf_query_index lose nothing to the parquet layout."""
+    + ivf_query_index_join lose nothing to the parquet layout."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_query_index(
+    return similarity.ivf_query_index_join(
         spark,
         _ivf_index_dir(spark, sf_dir),
         emb.where(F.col("vec_id") < 10),
@@ -4358,9 +4358,10 @@ def similarity_topk_ivf_index_append_fullprobe(spark, sf_dir):
     the union must equal exact brute force over the WHOLE corpus —
     any row lost, duplicated, or mis-assigned by the append breaks the
     typed hash. Partial-probe equivalence to a one-shot full build is
-    pinned in tests/test_operators.py::test_ivf_index_append_equals_full_build."""
+    pinned in tests/test_operators.py::test_ivf_index_append_equals_full_build.
+    Served by similarity.ivf_query_index_join."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_query_index(
+    return similarity.ivf_query_index_join(
         spark,
         _ivf_append_dir(spark, sf_dir),
         emb.where(F.col("vec_id") < 10),
@@ -4377,8 +4378,9 @@ FROM embeddings WHERE vec_id < 10
 
 @query("similarity_topk_ivf_index", _ORACLE_IVF_INDEX_RECALL)
 def similarity_topk_ivf_index(spark, sf_dir):
-    """PRODUCTION persisted-index serving: nprobe=3 of 8 cells, so the
-    scan reads ~3/8 of the corpus via static partition PRUNING
+    """PRODUCTION persisted-index serving (similarity.ivf_query_index_join):
+    nprobe=3 of 8 cells, so the scan reads ~3/8 of the corpus via
+    static partition PRUNING
     (PartitionFilters on cell — plan-locked in
     tests/test_operators.py::test_ivf_index_roundtrip); at 100 TB this
     is the property that makes IVF an index instead of a re-scan.
@@ -4390,7 +4392,7 @@ def similarity_topk_ivf_index(spark, sf_dir):
     twin above."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-    served = similarity.ivf_query_index(
+    served = similarity.ivf_query_index_join(
         spark, _ivf_index_dir(spark, sf_dir), q, k=5, nprobe=3
     ).select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
     exact = similarity.brute_force_topk(emb, q, k=5).select(
@@ -5393,8 +5395,11 @@ def similarity_topk_ivf_index_join_serve(spark, sf_dir):
     probed-cell set ever reach the driver (plan-locked by
     tests/test_plans.py::test_ann_join_serve_query_side_stays_distributed).
     At nprobe = n_centroids the result equals exact brute force, so the
-    dataflow hash-verifies against the same top-k oracle as the collect
-    path — and a pytest pins join == collect at partial probe too."""
+    dataflow hash-verifies against the same top-k oracle as brute
+    force; a pytest pins the partial probe against ivf_topk and a numpy
+    SQ8 reference. It runs the same dataflow as
+    similarity_topk_ivf_index_fullprobe; the name stays for the
+    catalogue and its correctness history."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_query_index_join(
         spark,
@@ -8773,9 +8778,9 @@ FROM scored QUALIFY rank <= 3
 @query("knn_graph_embeddings", ORACLE_KNN_GRAPH)
 def knn_graph_embeddings(spark, sf_dir):
     """Corpus-wide kNN graph (similarity.knn_graph): every vector's
-    top-3 neighbors through the persisted-index JOIN serve — the corpus
-    is BOTH sides, so the query side never collects to the driver (the
-    workload the r12 verdict's join-serve task exists for). At
+    top-3 neighbors from the persisted IVF index, scored per cell by the
+    cogrouped kernel — the corpus is BOTH sides, so the query side never
+    collects to the driver. At
     nprobe = n_centroids the graph is exact, hash-verified against the
     full n² oracle; production dials nprobe down and pays recall, not
     correctness of the dataflow."""

@@ -11,9 +11,8 @@ pass that should take wall/32 runs serially while 31 cores idle.
 plan: it repartitions to ``defaultParallelism`` ONLY when the frame's
 current partitioning is strictly narrower than the cluster — at real
 scale the condition is false and the call is a no-op (no exchange is
-inserted). This is the same probe the persisted-index serves use for
-narrow (one-file-per-cell) index scans, extracted for every heavy
-scan-side stage.
+inserted). The persisted-index serves call it on their narrow
+(one-file-per-cell) index scans, as every heavy scan-side stage does.
 
 Placement never affects results for the stages this guards (per-row
 functions, or joins/aggregations that re-key downstream); hashing on a
@@ -29,41 +28,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def spread_narrow(
-    df: DataFrame, *key_cols: str, scan_probe: bool = True
-) -> DataFrame:
+def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` (hashed on
     ``key_cols`` when given, round-robin otherwise) iff its current
     partitioning is narrower than the cluster's — a no-op at scale.
 
-    Probe cost (r16 advice): ``df.rdd.getNumPartitions()`` forces full
-    physical planning of the frame on the driver at every call site, in
-    hot operator-construction paths, even at scale where the call then
-    no-ops. With ``scan_probe`` (the default — every current call site
-    feeds a projection of a fresh file scan) the narrowness test is the
-    METADATA-ONLY file count (``len(df.inputFiles())``, the same probe
-    :func:`ivf_query_index_join` uses on compacted index scans): a scan
-    of >= cluster-parallelism files is never narrow, and a 1-file local
-    scan always is. The file count can misjudge a frame whose scan
-    packing/splitting diverges from its file count (few huge splittable
-    files, or a post-shuffle derived frame) — the cost is one spurious
-    or missed exchange, never a result change; pass
-    ``scan_probe=False`` for derived frames to get the exact (planning)
-    probe. Frames with no input files (in-memory sources) fall back to
-    the exact probe automatically."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if scan_probe:
-        try:
-            nf = len(df.inputFiles())
-        except Exception:
-            nf = 0
-        if nf >= target:
-            return df
-        narrow = nf > 0  # 0 files: not a file scan — use the exact probe
-    else:
-        narrow = False
-    if not narrow and df.rdd.getNumPartitions() >= target:
+    Two probes, cheapest first. The METADATA-ONLY file count
+    (``len(df.inputFiles())``) settles the at-scale case: a frame rooted
+    in >= cluster-parallelism files is never narrow, and the call
+    returns without planning anything (r16 advice: the exact probe
+    forces full physical planning on the driver in hot
+    operator-construction paths). Below that — a few files, an
+    in-memory source, or a one-file frame a derived stage already
+    spread — the exact ``df.rdd.getNumPartitions()`` probe decides, so
+    a frame that is already wide gets no spurious exchange."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        n_files = len(df.inputFiles())
+    except Exception:
+        n_files = 0
+    if n_files >= target or df.rdd.getNumPartitions() >= target:
         return df
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])

@@ -511,7 +511,9 @@ def build_ivf_index(
     other partition at the file listing, so serving cost scales with
     ``nprobe/n_centroids`` of the corpus, not the corpus — the property
     that makes IVF an index rather than a re-scan at 100 TB. Returns
-    the centroid matrix for immediate probing.
+    the centroid matrix for immediate probing; serve the layout with
+    :func:`ivf_query_index_join` (or :func:`knn_graph` for the corpus
+    against itself).
 
     ``quantize=True`` stores the FAISS-IVF+SQ8 layout instead: int8
     components (``array<tinyint>``) plus the per-vector ``scale`` and
@@ -519,7 +521,7 @@ def build_ivf_index(
     so each probed cell reads ~4-8× fewer bytes than the float layout
     (the probe is bandwidth-bound); exactness comes back at query time
     by re-ranking a small candidate pool against the original vectors
-    (``rerank_corpus`` in :func:`ivf_query_index`)."""
+    (``rerank_corpus`` in :func:`ivf_query_index_join`)."""
     spark = corpus.sparkSession
     cent_mat = (
         np.asarray(centroids, dtype=np.float64)
@@ -597,111 +599,6 @@ def ivf_index_append(
     if "qvec" in spark.read.parquet(f"{path}/cells").columns:
         assigned = _sq8_cells(assigned)
     assigned.write.mode("append").partitionBy("cell").parquet(f"{path}/cells")
-
-
-def ivf_query_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rerank_corpus: DataFrame | None = None,
-    rerank: int | None = None,
-) -> DataFrame:
-    """Probe a persisted :func:`build_ivf_index` layout: assign each
-    query to its ``nprobe`` nearest centroids, then read ONLY those
-    cell partitions (an explicit ``isin`` over the probed cell set —
-    static partition pruning, visible as ``PartitionFilters`` in the
-    scan; the probed set is bounded by ``n_queries × nprobe`` and by
-    ``n_centroids``, so the collect is a bounded scalar fetch). On a
-    float layout the result is identical to :func:`ivf_topk` run with
-    the same centroids — pinned by
-    ``tests/test_operators.py::test_ivf_index_roundtrip``.
-
-    A ``quantize=True`` index is detected from its schema: the pruned
-    scan scores the int8 rows (:func:`_dequantized_cos` — ~4-8× less
-    read bandwidth). Pass ``rerank_corpus`` (the original float
-    vectors) to recover exactness: the top ``rerank`` (default 10·k)
-    approximate candidates per query are re-scored with exact float
-    cosine — the candidate join touches O(queries × rerank) rows,
-    never a cell. Without it, ranks and ``cos_sim`` are the
-    de-quantized approximations.
-
-    The query side is broadcast (probe-batch contract); for a
-    DataFrame-sized query set use :func:`ivf_query_index_join`."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    cent_mat = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-        )
-        .withColumn("cell", F.explode(nearest_cells_udf(cent_mat, nprobe)(F.col("qv"))))
-        .localCheckpoint(eager=False)
-    )
-    probe_cells = sorted(r["cell"] for r in q.select("cell").distinct().collect())
-    cells = spark.read.parquet(f"{path}/cells").where(F.col("cell").isin(probe_cells))
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-
-    if "qvec" in cells.columns:  # SQ8 layout
-        qq = scalar_quantize(
-            queries.select(F.col(id_col).alias("q_id"), F.col(vec_col)), "q_id", vec_col
-        ).select(
-            F.col("q_id").alias("query_id"),
-            F.col("qvec").alias("q_qvec"),
-            F.col("scale").alias("q_scale"),
-            F.col("vnorm").alias("q_vnorm"),
-        )
-        approx = (
-            cells.select(F.col("vec_id").alias("neighbor_id"), "qvec", "scale", "vnorm", "cell")
-            .join(F.broadcast(q.select("query_id", "cell")), on="cell")
-            .join(F.broadcast(qq), on="query_id")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "approx_cos", _dequantized_cos()
-            )
-        )
-        if rerank_corpus is None:
-            scored = approx.withColumn("cos_sim", F.col("approx_cos"))
-        else:
-            n_cand = rerank or 10 * k
-            w_a = W.partitionBy("query_id").orderBy(
-                F.col("approx_cos").desc(), F.col("neighbor_id")
-            )
-            cands = (
-                approx.withColumn("arank", F.row_number().over(w_a))
-                .where(F.col("arank") <= n_cand)
-                .select("neighbor_id", "query_id")
-            )
-            exact_c = rerank_corpus.select(
-                F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-            )
-            scored = (
-                cands.join(exact_c, "neighbor_id")
-                .join(F.broadcast(q.select("query_id", "qv").distinct()), "query_id")
-                .withColumn(
-                    "cos_sim",
-                    cosine(F.col("qv"), F.col("cv")),
-                )
-            )
-    else:
-        scored = (
-            cells.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "cell"
-            )
-            .join(F.broadcast(q), on="cell")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "cos_sim",
-                cosine(F.col("qv"), F.col("cv")),
-            )
-        )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
 
 
 def embedding_near_dup_pairs(
@@ -1864,24 +1761,6 @@ def ivfpq_query_index(
     )
 
 
-# ---------------------------------------------------------------------------
-# Join-based index serving: the query set stays a DataFrame end-to-end.
-#
-# The collect-based serves above (`ivf_query_index`, `ivfpq_query_index`,
-# `pq_topk`) ship the query batch to every task
-# in a UDF closure — the right physical strategy for the serve-a-probe-
-# batch contract (queries are a bounded batch by design), but a driver
-# bottleneck the moment a user points them at a query TABLE: dedup-by-ANN,
-# corpus-vs-corpus retrieval, bulk re-embedding joins. These variants keep
-# queries distributed: only the model-sized artifacts (centroid matrix,
-# PQ codebooks — KBs to a few MB) ride in closures/broadcasts, the
-# query×cell match is an equi-join, and scoring runs over the joined
-# frame. Crossover note (SCALE.md): below ~10⁴ queries the closure path
-# wins (no query-side shuffle); above it — and always when the query set
-# is itself a table — use these.
-# ---------------------------------------------------------------------------
-
-
 #: rows of the query matrix scored per accumulator block inside the
 #: cogrouped scorer — bounds the (rows × |cell slice|) float64 scratch
 #: at ~4096 × cell-slice doubles regardless of how many queries probe a
@@ -1913,8 +1792,7 @@ def _cogroup_topk_scores(
     ``(neighbor_id, cv)``, the query side ``(query_id, qv)``, and every
     (query, candidate) pair to score must meet in exactly one group.
     :func:`brute_force_topk` calls it as one cell (salted corpus,
-    replicated queries); :func:`ivf_query_index_join`'s corpus-vs-corpus
-    serve calls it per IVF cell.
+    replicated queries); :func:`knn_graph` calls it per IVF cell.
 
     The pair-join form evaluates the aggregate-HOF ``dot`` fold
     INTERPRETED per element per candidate pair (guide §4.1); here each
@@ -2143,6 +2021,42 @@ def _replicated(q: DataFrame, salt: int) -> DataFrame:
     ).withColumn("__salt", F.col("__salt").cast("int"))
 
 
+#: salt of the persisted-index serves: each cell's rows spread over this
+#: many ``(cell, __salt)`` join keys (see :func:`_salted`), so a hot
+#: inverted list fans out over several reducers instead of one.
+_SERVE_SALT = 8
+
+
+def _ivf_probe(
+    spark, path: str, queries: DataFrame, nprobe: int, id_col: str, vec_col: str
+) -> tuple[int, DataFrame]:
+    """The number of stored cells of a :func:`build_ivf_index` layout,
+    and ``queries`` as one ``(query_id, qv, cell)`` row per probed cell
+    — the ``nprobe`` nearest stored centroids, assigned by
+    :func:`nearest_cells_udf` (centroid matrix in the closure, O(1) in
+    n_centroids)."""
+    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
+    cent_mat = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+    ).withColumn(
+        "cell", F.explode(nearest_cells_udf(cent_mat, nprobe)(F.col("qv")))
+    )
+    return len(cent_mat), q
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The per-query top-``k`` cut of the IVF index serves: rank by
+    (cos_sim desc, neighbor_id asc) — total, since ids are unique —
+    and emit ``(query_id, neighbor_id, cos_sim rounded to 6, rank)``."""
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
+    )
+
+
 def ivf_query_index_join(
     spark,
     path: str,
@@ -2153,64 +2067,51 @@ def ivf_query_index_join(
     vec_col: str = "embedding",
     rerank_corpus: DataFrame | None = None,
     rerank: int | None = None,
-    salt: int = 8,
-    prune_cells: bool = True,
 ) -> DataFrame:
-    """Serve a persisted :func:`build_ivf_index` layout with a
-    DATAFRAME-sized query set — same results as :func:`ivf_query_index`
-    (pinned by ``test_ivf_index_join_serve_matches_collect_path``), no
-    driver collect of the query side:
+    """Serve a persisted :func:`build_ivf_index` layout (float or SQ8)
+    with a query set of any size; only the centroids and the probed-cell
+    set reach the driver, the query side stays a DataFrame:
 
-    - cell assignment is the same Arrow-batched
-      :func:`nearest_cells_udf` (centroid matrix in the closure, O(1)
-      in n_centroids), exploded to one row per (query, probed cell);
+    - each query is assigned its ``nprobe`` nearest cells
+      (:func:`_ivf_probe`);
+    - below a full probe the cells scan is statically partition-pruned
+      (``PartitionFilters`` on ``cell``): the distinct probed-cell set
+      is bounded by ``n_centroids``, a model-sized collect. The probe
+      frame is checkpointed first, so the query read and the assignment
+      UDF run once per serve rather than once for the collect and again
+      for the join;
     - the candidate match is a salted equi-join queries×cells on
       ``(cell, __salt)`` — Catalyst/AQE picks broadcast for a small
       query frame and a de-skewed shuffle join for a large one;
-    - ``prune_cells`` keeps static partition pruning: the distinct
-      probed-cell set is bounded by ``n_centroids`` (a model-sized
-      collect, never query- or corpus-sized); disable it for
-      corpus-vs-corpus serves that probe every cell anyway;
-    - scoring is JVM-side (:func:`cosine` / :func:`_dequantized_cos`
-      higher-order expressions — no Python in the hot path), top-k a
-      per-query window, exactly the collect path's cut.
+    - scoring is JVM-side (:func:`cosine` arithmetic /
+      :func:`_dequantized_cos`), top-k a per-query window. On a float
+      layout the rows equal :func:`ivf_topk` run with the same centroids
+      (pinned by ``tests/test_operators.py::test_ivf_index_roundtrip``).
 
-    SQ8 layouts quantize the query side with the same
-    :func:`scalar_quantize` expressions (distributed, not collected);
-    pass ``rerank_corpus`` to recover exactness as in
-    :func:`ivf_query_index`."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    cent_mat = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn(
-        "cell", F.explode(nearest_cells_udf(cent_mat, nprobe)(F.col("qv")))
-    )
+    A ``quantize=True`` index is detected from its schema: the scan
+    scores the int8 rows against the query quantized with the same
+    :func:`scalar_quantize` expressions (~4-8× less read bandwidth).
+    Pass ``rerank_corpus`` (the original float vectors) to recover
+    exactness: the top ``rerank`` (default 10·k) approximate candidates
+    per query are re-scored with exact float cosine — the candidate join
+    touches O(queries × rerank) rows, never a cell. Without it, ranks and
+    ``cos_sim`` are the de-quantized approximations."""
+    n_cells, q = _ivf_probe(spark, path, queries, nprobe, id_col, vec_col)
     cells = spark.read.parquet(f"{path}/cells")
-    if prune_cells and nprobe < len(cent_mat):  # fullprobe reads every cell
+    if nprobe < n_cells:  # fullprobe reads every cell
+        q = q.localCheckpoint(eager=False)
         probe_cells = sorted(
             r["cell"] for r in q.select("cell").distinct().collect()
         )
         cells = cells.where(F.col("cell").isin(probe_cells))
     # Spread a NARROW index scan across the cluster: a young/compacted
-    # index has one parquet file per cell (n_centroids files), so the
-    # per-pair scoring stage — the serve's entire cost — would run on
-    # n_centroids tasks no matter how many cores exist (the salt only
-    # de-skews SHUFFLE joins; under a broadcast of the query side the
-    # stream stays at scan parallelism). File count is metadata-only
-    # (the _documents()/compactor probe); at scale each cell spans many
-    # files/splits and no repartition is inserted. Hash on the row id
-    # (deterministic, no sort-before-repartition) — placement does not
-    # affect results, the top-k window re-keys by query later.
-    target = spark.sparkContext.defaultParallelism
-    _cogrouped = not prune_cells and "qvec" not in cells.columns
-    if not _cogrouped and 0 < len(cells.inputFiles()) < target:
-        # (the cogrouped path re-shuffles by (cell, salt) anyway — an
-        # extra spread exchange would be pure waste there)
-        cells = cells.repartition(target, F.col("vec_id"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
+    # index has one parquet file per cell, so the per-pair scoring stage
+    # — the serve's entire cost — would otherwise run on n_centroids
+    # tasks no matter how many cores exist (the salt only de-skews
+    # SHUFFLE joins; under a broadcast of the query side the stream
+    # stays at scan parallelism). Placement does not affect results:
+    # the top-k window re-keys by query later.
+    cells = spread_narrow(cells, "vec_id")
     if "qvec" in cells.columns:  # SQ8 layout
         qvec = F.col("qv")
         amax = F.array_max(F.transform(qvec, lambda x: F.abs(x)))
@@ -2226,10 +2127,10 @@ def ivf_query_index_join(
                 qscale.alias("q_scale"),
                 norm(qvec).alias("q_vnorm"),
             ),
-            salt,
+            _SERVE_SALT,
         )
         approx = (
-            _salted(cells, "vec_id", salt)
+            _salted(cells, "vec_id", _SERVE_SALT)
             .withColumnRenamed("vec_id", "neighbor_id")
             .join(qq, on=["cell", "__salt"])
             .where(F.col("neighbor_id") != F.col("query_id"))
@@ -2254,38 +2155,17 @@ def ivf_query_index_join(
             scored = cands.join(exact_c, "neighbor_id").withColumn(
                 "cos_sim", cosine(F.col("qv"), F.col("cv"))
             )
-    elif not prune_cells:
-        # corpus-vs-corpus serve (knn_graph: every cell probed, the
-        # query side is corpus-sized) — score per (cell, salt) GROUP
-        # with the vectorized cogrouped scorer instead of per PAIR with
-        # the interpreted fold. Same shuffle keys and bytes as the
-        # salted equi-join; bit-identical values and rows (sequential-
-        # dim accumulation + same-total-order per-group cut — see
-        # _cogroup_topk_scores). The 56 s of fold task-time this stage
-        # cost at sf0.1 drops to 64 numpy passes.
-        scored = _cogroup_topk_scores(
-            _salted(cells, "vec_id", salt).select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("cv"),
-                "cell",
-                "__salt",
-            ),
-            _replicated(q, salt),
-            k,
-            _col_type(queries, id_col),
-        )
     else:
         # kept JVM-side: via _cogroup_topk_scores, same wall, +0.5-0.9 s CPU/op
         # norms precomputed ONCE PER SIDE before the join: the naive
         # cosine(qv, cv) re-evaluates sqrt(Σx²) for BOTH vectors on
         # every candidate PAIR — for a probe-batch serve the broadcast
         # equi-join keeps the index scan shuffle-free, which the
-        # cogrouped scorer above cannot (its groupBy must move the
-        # probed cells), so the JVM pair path stays the small-query
-        # default. dot/(qn·vn) is bit-identical arithmetic (same sqrt,
-        # same multiply), just hoisted above the join.
+        # cogrouped scorer (knn_graph) cannot (its groupBy must move the
+        # probed cells). dot/(qn·vn) is bit-identical arithmetic (same
+        # sqrt, same multiply), just hoisted above the join.
         scored = (
-            _salted(cells, "vec_id", salt)
+            _salted(cells, "vec_id", _SERVE_SALT)
             .select(
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("v").alias("cv"),
@@ -2295,7 +2175,7 @@ def ivf_query_index_join(
             )
             .join(
                 _replicated(
-                    q.withColumn("__qn", norm(F.col("qv"))), salt
+                    q.withColumn("__qn", norm(F.col("qv"))), _SERVE_SALT
                 ),
                 on=["cell", "__salt"],
             )
@@ -2306,16 +2186,7 @@ def ivf_query_index_join(
                 / (F.col("__qn") * F.col("__vn")),
             )
         )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _top_k(scored, k)
 
 
 def ivfpq_query_index_join(
@@ -2328,8 +2199,6 @@ def ivfpq_query_index_join(
     rerank_pool: int = 20,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salt: int = 8,
-    prune_cells: bool = True,
 ) -> DataFrame:
     """Serve a persisted :func:`build_ivfpq_index` layout with a
     DATAFRAME-sized query set — the join twin of
@@ -2379,17 +2248,15 @@ def ivfpq_query_index_join(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     ).withColumn("cell", F.explode(probe_udf(F.col("qv"))))
     encoded = spark.read.parquet(f"{path}/cells")
-    if prune_cells and nprobe < len(cent):  # fullprobe reads every cell
+    if nprobe < len(cent):  # fullprobe reads every cell
         probe_cells = sorted(
             r["cell"] for r in q.select("cell").distinct().collect()
         )
         encoded = encoded.where(F.col("cell").isin(probe_cells))
-    # spread a narrow (one-file-per-cell) index scan — see the same
-    # probe in ivf_query_index_join: the ADC scoring stage otherwise
-    # caps at n_centroids tasks under a broadcast query side
-    target = spark.sparkContext.defaultParallelism
-    if 0 < len(encoded.inputFiles()) < target:
-        encoded = encoded.repartition(target, F.col("id"))
+    # spread a narrow (one-file-per-cell) index scan: the ADC scoring
+    # stage otherwise caps at n_centroids tasks under a broadcast
+    # query side
+    encoded = spread_narrow(encoded, "id")
 
     sub_idx = np.arange(m)[None, :]
 
@@ -2409,11 +2276,11 @@ def ivfpq_query_index_join(
 
     pool = max(k, rerank_pool)
     scored = (
-        _salted(encoded, "id", salt)
+        _salted(encoded, "id", _SERVE_SALT)
         .select(
             F.col("id").alias("neighbor_id"), "codes", "cell", "__salt"
         )
-        .join(_replicated(q, salt), on=["cell", "__salt"])
+        .join(_replicated(q, _SERVE_SALT), on=["cell", "__salt"])
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "adc_score", adc_udf(F.col("qv"), F.col("codes"), F.col("cell"))
@@ -2435,19 +2302,7 @@ def ivfpq_query_index_join(
             "cos_sim", cosine(F.col("qv"), F.col("cv"))
         )
     )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _top_k(exact, k)
 
 
 def knn_graph(
@@ -2458,31 +2313,44 @@ def knn_graph(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salt: int = 8,
 ) -> DataFrame:
     """k-nearest-neighbor GRAPH over the whole corpus — every row's
     top-``k`` cosine neighbors as ``(query_id, neighbor_id, cos_sim,
     rank)`` edges — the substrate for graph-based dedup, diversity
     analysis, and label propagation at corpus scale.
 
-    This is the corpus-vs-corpus workload the join serve exists for: the
-    corpus plays BOTH sides of :func:`ivf_query_index_join`, so the
-    query side never collects to the driver (a corpus-sized
-    ``collect()`` is exactly what the guarded probe-batch paths refuse).
-    Cost shape: each row scores against its ``nprobe`` / ``n_centroids``
-    fraction of the corpus through the salted cell equi-join — the IVF
-    partitioning is what keeps this off the all-pairs n² cliff, and
-    ``nprobe`` is the recall/cost dial. ``prune_cells`` is off: a corpus
-    query set probes essentially every cell, so the distinct-cell
-    pre-job would be a wasted pass."""
-    return ivf_query_index_join(
-        spark,
-        path,
-        corpus,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        salt=salt,
-        prune_cells=False,
+    The corpus probes a persisted float :func:`build_ivf_index` layout
+    as a query table: it never collects to the driver (a corpus-sized
+    ``collect()`` is exactly what the guarded probe-batch paths refuse),
+    and every row scores against its ``nprobe`` / ``n_centroids``
+    fraction of the corpus — the IVF partitioning keeps this off the
+    all-pairs n² cliff, and ``nprobe`` is the recall/cost dial.
+
+    A corpus query set probes essentially every cell, so the cells scan
+    is not pruned (a distinct-cell pre-job would be a wasted pass) and
+    the pairs are scored per ``(cell, __salt)`` GROUP by
+    :func:`_cogroup_topk_scores` — vectorized numpy passes instead of
+    the per-pair interpreted fold. The rows equal those
+    :func:`ivf_query_index_join` returns for the same corpus
+    (sequential-dim accumulation, same total order in the per-group
+    cut). Raises ``ValueError`` on an SQ8 (``quantize=True``) layout:
+    the kernel scores float vectors."""
+    cells = spark.read.parquet(f"{path}/cells")
+    if "qvec" in cells.columns:
+        raise ValueError(
+            f"knn_graph scores float vectors; {path} is an SQ8 "
+            "(quantize=True) layout — serve it with ivf_query_index_join"
+        )
+    _, q = _ivf_probe(spark, path, corpus, nprobe, id_col, vec_col)
+    scored = _cogroup_topk_scores(
+        _salted(cells, "vec_id", _SERVE_SALT).select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("v").alias("cv"),
+            "cell",
+            "__salt",
+        ),
+        _replicated(q, _SERVE_SALT),
+        k,
+        _col_type(corpus, id_col),
     )
+    return _top_k(scored, k)
